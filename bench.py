@@ -162,10 +162,12 @@ SCALE_SWEEP_RUNS = 2
 
 def _scale_sweep(spark, sf_dir: str, queries) -> dict:
     """Min-of-N timings for SCALE_SWEEP_QUERIES at the deterministic
-    10× replica of ``sf_dir``, with MMR_SETMASK=off (the branch any
-    real-vocabulary corpus executes). The replica is derived input
-    data (scripts/gen_scale_data.py), generated once on disk and
-    reused; cold-run hygiene matches the headline loop."""
+    10× replica of ``sf_dir``, in the LOSSY set-bitmap regime (the
+    branch any real-vocabulary corpus executes): the bitmap width is
+    set to the widest W with 64·W below the replica's distinct-token
+    count. The replica is derived input data
+    (scripts/gen_scale_data.py), generated once on disk and reused;
+    cold-run hygiene matches the headline loop."""
     import subprocess
 
     import multithreaded_mapreduce_spark.operators.dedup as _dd
@@ -194,8 +196,9 @@ def _scale_sweep(spark, sf_dir: str, queries) -> dict:
             check=True, capture_output=True, timeout=600,
         )
         gen_s = round(time.perf_counter() - t0, 1)
-    saved = os.environ.get("MMR_SETMASK")
-    os.environ["MMR_SETMASK"] = "off"
+    saved_words = _dd.SET_BITMAP_WORDS
+    n_vocab = _dd._corpus_vocab(spark, scale_dir)["n"]
+    _dd.SET_BITMAP_WORDS = max(1, (n_vocab - 1) // 64)
     try:
         timings: dict[str, float] = {}
         for name in SCALE_SWEEP_QUERIES:
@@ -204,26 +207,25 @@ def _scale_sweep(spark, sf_dir: str, queries) -> dict:
                 release_tracked()
                 release_result_memos()
                 spark.catalog.clearCache()
-                _dd._SETMASK_DECISION_CACHE.clear()
                 t0 = time.perf_counter()
                 queries[name].builder(spark, scale_dir).write.mode(
                     "overwrite"
                 ).format("noop").save()
                 runs.append(time.perf_counter() - t0)
             timings[name] = round(min(runs), 3)
+        bitmap_words = _dd.SET_BITMAP_WORDS
     finally:
-        if saved is None:
-            os.environ.pop("MMR_SETMASK", None)
-        else:
-            os.environ["MMR_SETMASK"] = saved
-        _dd._SETMASK_DECISION_CACHE.clear()
+        _dd.SET_BITMAP_WORDS = saved_words
         release_tracked()
         release_result_memos()
         spark.catalog.clearCache()
     return {
         "scale_dir": scale_dir,
         "factor": 10,
-        "setmask": "off",
+        # the exact set-bitmap regime is off: 64·W < n_vocab
+        "setmask": "off" if 64 * bitmap_words < n_vocab else "exact",
+        "n_vocab": n_vocab,
+        "bitmap_words": bitmap_words,
         "runs_per_query": SCALE_SWEEP_RUNS,
         "gen_seconds": gen_s,
         "queries": timings,
@@ -504,23 +506,6 @@ def main() -> None:
     }
     release_result_memos()
 
-    # 10×-corpus scale sweep (r11, VERDICT r10 task 8): sf0.1 can no
-    # longer measure parallelism or the at-scale dedup path (59/87
-    # core-ratios ≈ 1 in PERF_r10; the setmask engages on every local
-    # SF), so stamp a SMALL min-of-2 sweep at the deterministic 10×
-    # replica of the bench corpus (scripts/gen_scale_data.py — derived
-    # INPUT data, generated once on disk, never query results) with the
-    # exact-bitmask path disabled: that is the branch a real-vocabulary
-    # corpus executes, and the one the r11 lossy-bitmap prune targets.
-    # OUTSIDE the headline totals; any failure degrades to a skipped
-    # stamp, never a bench failure. MMR_BENCH_SCALE_SWEEP=off disables.
-    scale_sweep_stamp: dict = {"skipped": "off"}
-    if os.environ.get("MMR_BENCH_SCALE_SWEEP", "auto") != "off":
-        try:
-            scale_sweep_stamp = _scale_sweep(spark, sf_dir, queries)
-        except Exception as ex:  # noqa: BLE001 — informational stamp only
-            scale_sweep_stamp = {"skipped": repr(ex)[:200]}
-
     total = round(sum(timings.values()), 3)
     r3_set = HEADLINE[: HEADLINE.index("kmeans_lloyd")]
     r4_set = HEADLINE[: HEADLINE.index("pretraining_funnel_report")]
@@ -580,9 +565,10 @@ def main() -> None:
         # shared quality-gates memo: composite cold, agreement +
         # weighted-sample warm (r11)
         "quality_memo_decision": quality_memo_stamp,
-        # 10×-replica sweep with the setmask disabled — the at-scale
-        # dedup branch the r11 bitmap prune targets (r11)
-        "scale_sweep": scale_sweep_stamp,
+        # 10×-replica sweep in the lossy set-bitmap regime — the
+        # at-scale dedup branch; filled in below, after every decision
+        # stamp above has been read
+        "scale_sweep": {"skipped": "off"},
         # md5-uniform eval-sample modulus for the ground-truth-bound
         # eval queries (k = 1 → identity; k > 1 → 1-in-k doc sample)
         "eval_sample_decision": dict(_dedup.LAST_EVAL_SAMPLE_DECISION),
@@ -620,6 +606,22 @@ def main() -> None:
         "value": total,
         "sf": _sf_from_dir(sf_dir),
     }
+    # 10×-corpus scale sweep: sf0.1 can no longer measure parallelism
+    # or the at-scale dedup path (the exact set bitmaps engage on every
+    # local SF), so stamp a SMALL min-of-2 sweep at the deterministic
+    # 10× replica of the bench corpus (scripts/gen_scale_data.py —
+    # derived INPUT data, generated once on disk, never query results)
+    # in the lossy set-bitmap regime: the branch a real-vocabulary
+    # corpus executes. It runs AFTER the decision stamps above were
+    # read, so its own decisions (a 10× corpus) never overwrite the
+    # headline's. OUTSIDE the headline totals; any failure degrades to
+    # a skipped stamp, never a bench failure. MMR_BENCH_SCALE_SWEEP=off
+    # disables.
+    if os.environ.get("MMR_BENCH_SCALE_SWEEP", "auto") != "off":
+        try:
+            result["scale_sweep"] = _scale_sweep(spark, sf_dir, queries)
+        except Exception as ex:  # noqa: BLE001 — informational stamp only
+            result["scale_sweep"] = {"skipped": repr(ex)[:200]}
     line = json.dumps(result)
     print(line)
     # also persist to a file: the driver's stdout tail truncates long

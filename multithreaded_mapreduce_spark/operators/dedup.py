@@ -181,35 +181,104 @@ def _group_relation(
 
 
 # ------------------------------------------------------------------
-# Fixed-width set-bitmask compare (r10 optimization, guide §2.3
-# "narrower types" + §1.2 per-task work). The exact-jaccard and
-# minhash-verify paths both reduce to |A∩B| over distinct-token-id
-# sets; Spark's array_intersect builds a hash set per ROW PAIR, and
-# the pairwise group compare was profiled at ~93 executor-seconds at
-# sf0.1 (the single heaviest stage in the suite; the minhash verify
-# join another ~44). When the corpus' distinct token-id universe fits
-# SETMASK_MAX_VOCAB bit positions, each set packs into
-# ceil(vocab/64) longs and every intersection becomes W AND+popcount
-# ops — and the relation that shuffles/broadcasts carries W longs
-# instead of a variable-length array. The id→position mapping is
-# injective (row_number over the distinct ids), so |A∩B| — and with
-# it every jaccard double — is bit-identical to the array path; the
-# mapping is built INSIDE the plan from the already-persisted
-# token-set relation (one tiny window + broadcast join), never cached
-# across runs. Above the cap (any realistic corpus vocabulary) the
-# decision disengages and the array/postings paths stand unchanged;
-# the knob exists because low-cardinality token universes — enum-like
-# fields, k-mer alphabets, hashed feature buckets — are a real shape,
-# and the driver corpus is one. Kill switch: MMR_SETMASK=off.
+# Set bitmaps: the one structure behind every |A∩B| verify (the
+# jaccard group cross, containment, both MinHash verifies and the
+# incremental admission). Spark's array_intersect builds a hash set per
+# candidate PAIR; a set bitmap is built once per SET and turns each
+# pairwise intersection into W AND/OR+popcount ops over longs.
+#
+# _set_bitmaps turns a set relation into (key, _b0.._b{W-1}) with ONE
+# bit_or aggregate over the exploded (key, id) rows — codegen, no
+# higher-order-function lambdas — and each verify joins it back by key.
+# W = SET_BITMAP_WORDS gives 64·W bit positions, and the corpus picks
+# one of two regimes from a single memoized distinct-token count of the
+# documents relation (_corpus_vocab; every site's id universe is a
+# function of the tokens of a subset of those documents, so the count
+# bounds each site's distinct ids):
+#
+# * exact (vocab <= 64·W): bit positions come from a dense id→position
+#   rank (one tiny window + broadcast join), so the map is injective
+#   and popcount(a & b) IS |A∩B| — array_intersect never runs and the
+#   verify sides carry ceil(vocab/64) longs instead of the id array.
+#   At or under LITERAL_MAX_VOCAB tokens the same count collects the
+#   positions, and the one word is a pure projection instead
+#   (_literal_mask_cols: no extra stages — on the 31-token test corpora
+#   the bit_or build's extra stages cost more than the verify saves);
+# * lossy (vocab > 64·W, any real corpus vocabulary): position =
+#   pmod(id, 64·W), collisions allowed. Every set bit needs at least
+#   one distinct member and each member sets exactly one bit, so
+#   popcount(a | b) <= |A ∪ B| and
+#
+#       ub = na + nb − popcount(a | b)  >=  |A ∩ B|
+#
+#   is an exact UPPER bound however many ids collide. The exact
+#   array_intersect stays, CASE-guarded by that bound (_bitmap_guard):
+#   a candidate whose ub cannot reach the threshold never evaluates
+#   it, and survivors pay the unchanged exact compare, so the output is
+#   identical (false positives only, never false negatives). The +1
+#   slack in the keep conditions absorbs double rounding at the
+#   threshold boundary (the exact filter still decides).
+#
+# Where the lossy prune runs is fixed by the candidate source each
+# site already knows, never by a knob: the |G|² size-pruned crosses
+# (the jaccard group cross, containment's nested loop) are mostly
+# sub-threshold pairs, so the bound pays for the bitmap build; the
+# filtered candidate streams (containment's prefix witnesses, the three
+# banding verifies) are mostly true near-dups, so they keep the plain
+# array_intersect and skip the build (A/B in CHANGES.md).
 # ------------------------------------------------------------------
 
-SETMASK_MAX_VOCAB = int(os.environ.get("MMR_SETMASK_MAX_VOCAB", "1024"))
-#: at or under this vocab the bit positions are collected to the driver
-#: (bounded: ≤ 64 longs) and masks become pure projections — no
-#: window/join/aggregate stages enter any consumer plan
-SETMASK_LITERAL_MAX_VOCAB = 64
-_SETMASK_DECISION_CACHE: dict[tuple, dict] = {}
-LAST_SETMASK_DECISION: dict = {}
+#: longs per set bitmap (64·W bit positions); the exact regime holds
+#: while the corpus has at most 64·W distinct tokens
+SET_BITMAP_WORDS = 16
+#: at or under this many distinct tokens the exact positions are
+#: collected to the driver (bounded: one word) and each bitmap is a
+#: pure projection (_literal_mask_cols) — no extra stages in any plan
+LITERAL_MAX_VOCAB = 64
+#: per documents relation (keyed by _docs_stamp): the distinct-token
+#: count "n", plus, from 1 to LITERAL_MAX_VOCAB, the sorted distinct
+#: ids in each id space the verify sites use — "toks_h" (xxhash64 of
+#: the token) and "tids" (_token_hash_id)
+_VOCAB_CACHE: dict[str, dict] = {}
+
+
+def _corpus_vocab(spark: SparkSession, sf_dir: str) -> dict:
+    """The distinct non-empty whitespace tokens of ``sf_dir``'s
+    documents — ONE count per document relation, memoized and shared
+    by every verify site (keyed by path + mtime, so a rewritten fixture
+    re-counts). Every site's id universe is a function of the tokens of
+    a subset of these documents, so the count bounds each site's
+    distinct ids and the literal lists cover them."""
+    key = _docs_stamp(sf_dir)
+    if key not in _VOCAB_CACHE:
+        toks = (
+            load_table(spark, sf_dir, "documents")
+            .select(F.explode(F.split("text", r"\s+")).alias("t"))
+            .filter(F.length("t") > 0)
+            .distinct()
+        )
+        v: dict = {"n": toks.count()}
+        if 0 < v["n"] <= LITERAL_MAX_VOCAB:
+            rows = toks.select(
+                F.xxhash64("t").alias("toks_h"), _token_hash_id("t").alias("tids")
+            ).collect()
+            for space in ("toks_h", "tids"):
+                v[space] = sorted({r[space] for r in rows})
+        _VOCAB_CACHE[key] = v
+    return _VOCAB_CACHE[key]
+
+
+def _bitmap_regime(spark: SparkSession, sf_dir: str) -> tuple:
+    """(exact, words, literal) for every set bitmap over ``sf_dir``:
+    exact with just enough words for the dense positions
+    (ceil(vocab/64)) when the vocabulary fits 64·W bits, else lossy at
+    all W words; ``literal`` is the _corpus_vocab entry when its id
+    lists are there (vocab <= LITERAL_MAX_VOCAB), else None."""
+    v = _corpus_vocab(spark, sf_dir)
+    n = v["n"]
+    if n > 64 * SET_BITMAP_WORDS:
+        return False, SET_BITMAP_WORDS, None
+    return True, max(1, -(-n // 64)), v if "tids" in v else None
 
 
 def _signed64(x: int) -> int:
@@ -219,10 +288,10 @@ def _signed64(x: int) -> int:
 
 
 def _literal_mask_cols(arr_col: str, vocab_ids: list) -> list:
-    """Mask word columns _m0.._m{W-1} as a PURE PROJECTION over the
-    token-id array column: one array_contains per vocab bit, the shift
-    precomputed in Python. O(|vocab| × |set|) per row — bounded by the
-    literal cap — and zero extra plan stages."""
+    """Exact bitmap words _b0.._b{W-1} as a PURE PROJECTION over the
+    id-array column: one array_contains per vocab bit, the shift
+    precomputed in Python. O(|vocab| × |set|) per row — bounded by
+    LITERAL_MAX_VOCAB — and zero extra plan stages."""
     from functools import reduce
 
     nw = (len(vocab_ids) + 63) // 64
@@ -236,198 +305,67 @@ def _literal_mask_cols(arr_col: str, vocab_ids: list) -> list:
             for p, v in enumerate(vocab_ids)
             if p // 64 == w
         ]
-        cols.append(
-            reduce(lambda a, b: a.bitwiseOR(b), terms).alias(f"_m{w}")
-        )
+        cols.append(reduce(lambda a, b: a.bitwiseOR(b), terms).alias(f"_b{w}"))
     return cols
 
 
-def _setmask_decision(
-    spark: SparkSession, sf_dir: str, ids: DataFrame, site: str
-) -> dict:
-    """Measured per-corpus decision (memoized, the LSH/jaccard/zscore
-    pattern): count the distinct token ids of ``ids`` and engage the
-    bitmask compare only when 0 < n <= SETMASK_MAX_VOCAB. Either path
-    yields identical values (pytest-asserted), so the cached choice
-    only affects the physical plan."""
-    global LAST_SETMASK_DECISION
-    if os.environ.get("MMR_SETMASK", "auto") == "off":
-        LAST_SETMASK_DECISION = {"forced": "off", "engage": False, "site": site}
-        return LAST_SETMASK_DECISION
-    key = (_docs_stamp(sf_dir), site)
-    if key not in _SETMASK_DECISION_CACHE:
-        n = ids.distinct().count()
-        d = {
-            "site": site,
-            "n_vocab": n,
-            "max_vocab": SETMASK_MAX_VOCAB,
-            "n_words": (n + 63) // 64,
-            "engage": 0 < n <= SETMASK_MAX_VOCAB,
-        }
-        if d["engage"] and n <= SETMASK_LITERAL_MAX_VOCAB:
-            # LITERAL positions (the same bounded-driver-state pattern
-            # as the Lloyd/PQ/BPE knobs): ≤ 64 ids collect once per
-            # corpus into the memoized decision, and every mask becomes
-            # a pure projection (array_contains per vocab bit) with NO
-            # extra window/join/aggregate stages in any consumer plan —
-            # this is what makes the bounded eval-sampled variants a
-            # win too (the join-based mask build's added stages cost
-            # more than bounded relations save, A/B-measured).
-            d["vocab_ids"] = sorted(
-                r["id"] for r in ids.distinct().collect()
-            )
-        _SETMASK_DECISION_CACHE[key] = d
-    LAST_SETMASK_DECISION = _SETMASK_DECISION_CACHE[key]
-    return LAST_SETMASK_DECISION
-
-
-def _setmask_vocab(ids: DataFrame) -> DataFrame:
-    """(id, pos) with pos = dense 0-based rank of the distinct ids —
-    the injective bit-position assignment. The window is a single
-    sort of <= SETMASK_MAX_VOCAB rows."""
+def _set_bitmaps(
+    sets: DataFrame, key: str, arr_col: str, exact: bool, nw: int
+) -> DataFrame:
+    """(key, _b0.._b{nw-1}) for the id-array column ``arr_col`` of
+    ``sets``: one bit_or aggregate over the exploded (key, id) rows.
+    Word w holds bit (pos % 64) of every member with pos in
+    [64w, 64w+64); pos is the dense id rank (exact) or pmod(id, 64·nw)
+    (lossy)."""
     from pyspark.sql import Window
 
-    return ids.distinct().select(
-        "id", (F.row_number().over(Window.orderBy("id")) - 1).alias("pos")
+    rows = sets.select(key, F.explode(arr_col).alias("id"))
+    if exact:
+        ranks = (
+            rows.select("id")
+            .distinct()
+            .select("id", (F.row_number().over(Window.orderBy("id")) - 1).alias("pos"))
+        )
+        rows = rows.join(F.broadcast(ranks), "id")
+    else:
+        rows = rows.select(key, F.pmod(F.col("id"), F.lit(64 * nw)).alias("pos"))
+    # the PySpark shiftleft wrapper only takes a literal shift; the JVM
+    # ShiftLeft expression takes a column one — go through expr()
+    bit = F.expr("shiftleft(CAST(1 AS BIGINT), CAST(pos % 64 AS INT))")
+    word = F.expr("pos div 64")
+    return rows.groupBy(key).agg(
+        *[
+            F.bit_or(F.when(word == w, bit).otherwise(F.lit(0).cast("long"))).alias(
+                f"_b{w}"
+            )
+            for w in range(nw)
+        ]
     )
 
 
-def _mask_word_aggs(n_words: int, pos_col: str = "pos") -> list:
-    """bit_or aggregate columns _m0.._m{W-1}: word w collects bit
-    (pos % 64) of every member id with pos in [64w, 64w+64)."""
-    # the PySpark shiftleft wrapper only takes a literal shift; the JVM
-    # ShiftLeft expression takes a column one — go through expr()
-    shifted = F.expr(f"shiftleft(CAST(1 AS BIGINT), CAST({pos_col} % 64 AS INT))")
-    return [
-        F.bit_or(
-            F.when(
-                (F.col(pos_col) >= w * 64) & (F.col(pos_col) < (w + 1) * 64),
-                shifted,
-            ).otherwise(F.lit(0).cast("long"))
-        ).alias(f"_m{w}")
-        for w in range(n_words)
-    ]
-
-
-def _mask_intersect_size(n_words: int, a_prefix: str, b_prefix: str):
-    """|A∩B| as W AND+popcounts — exact, because id→pos is injective."""
+def _popcount_sum(a_prefix: str, b_prefix: str, op: str, nw: int):
+    """Σ_w popcount(a_w OP b_w) over ``nw`` bitmap words."""
     from functools import reduce
     from operator import add
+
+    def combine(a, b):
+        return a.bitwiseAND(b) if op == "and" else a.bitwiseOR(b)
 
     return reduce(
         add,
         [
-            F.bit_count(
-                F.col(f"{a_prefix}{w}").bitwiseAND(F.col(f"{b_prefix}{w}"))
-            )
-            for w in range(n_words)
+            F.bit_count(combine(F.col(f"{a_prefix}{w}"), F.col(f"{b_prefix}{w}")))
+            for w in range(nw)
         ],
-    ).cast("int")
-
-
-# ------------------------------------------------------------------
-# Hashed-bitmap union bound (r11 optimization, guide §2.3/§3.2 — the
-# Bloom-style runtime prune, applied per pair instead of per join).
-# This is the scale path the exact setmask CANNOT serve: past
-# SETMASK_MAX_VOCAB distinct ids (any real corpus vocabulary) the
-# injective bit assignment no longer fits, and before r11 every
-# disengaged verify fell back to a per-pair array_intersect — profiled
-# 5084 executor-seconds for dedup_components' pairwise stage at the 10×
-# corpus with MMR_SETMASK=off (plans/r11, the 100 TB shape). The fix:
-# each token-id set additionally carries a FIXED-width lossy bitmap
-# (W longs; bit = pmod(id, 64·W), collisions allowed). For any two sets
-# popcount(bm_a | bm_b) <= |A ∪ B| — every set bit needs at least one
-# distinct member, and each member sets exactly one bit — so
-#
-#     ub = na + nb − popcount(bm_a | bm_b)  >=  |A ∩ B|
-#
-# is an exact UPPER bound on the intersection no matter how many ids
-# collide. A candidate pair whose ub cannot reach the jaccard (or
-# containment) threshold is dropped BEFORE the exact verify; survivors
-# still pay the unchanged array_intersect + threshold filter, so the
-# output is bit-identical (the bound admits false positives, never
-# false negatives). Per-pair cost: W OR+popcounts instead of an
-# array_intersect hash build — the same arithmetic shape that made the
-# setmask a 10-30× win, minus the exactness (which the prune does not
-# need). The +1 slack in the keep conditions absorbs double-rounding at
-# the threshold boundary (the exact filter still decides). Kill switch:
-# MMR_BITMAP_PRUNE=off; width knob MMR_BITMAP_WORDS (longs per set,
-# default 16 = 1024 bits — comfortably past the ~40-token sets of the
-# test corpora; for real ~1k-token documents the bound saturates
-# gracefully and merely prunes less).
-# ------------------------------------------------------------------
-
-BITMAP_PRUNE_WORDS = int(os.environ.get("MMR_BITMAP_WORDS", "16"))
-
-
-def _bitmap_prune_on(site_default: bool = True) -> bool:
-    """Per-SITE engagement (A/B-measured at the 10× corpus with
-    MMR_SETMASK=off): the prune pays for itself where the candidate
-    pool is large and mostly sub-threshold — the |G|²/2 nested cross
-    (dedup_components 173→27.6 s) and the containment nested loop
-    (65.6→52.1 s) — but banding-survivor verifies see candidates that
-    are mostly TRUE near-dups, so the per-row bitmap build is overhead
-    with nothing to prune (dedup_minhash_verified 24.9→27.2 s,
-    dedup_incremental_neardup 7.3→8.4 s WORSE with it on). Those sites
-    pass site_default=False. MMR_BITMAP_PRUNE=on|off overrides every
-    site; auto (default) takes the per-site measurement."""
-    mode = os.environ.get("MMR_BITMAP_PRUNE", "auto")
-    if mode == "off" or BITMAP_PRUNE_WORDS <= 0:
-        return False
-    if mode == "on":
-        return True
-    return site_default
-
-
-def _bitmap_cols(arr_col: str, prefix: str) -> list:
-    """Lossy-bitmap word columns {prefix}0..{prefix}{W-1} over a
-    long-array column: bit pmod(id, 64·W), one aggregate fold per word
-    (O(W·|set|) per ROW, once — vs per candidate pair downstream)."""
-    nw = BITMAP_PRUNE_WORDS
-    nbits = 64 * nw
-
-    def _step_for(w: int):
-        # the fold lambda must take EXACTLY (acc, t): PySpark reads the
-        # callable's arity to build the higher-order function
-        def step(acc, t):
-            b = F.pmod(t, F.lit(nbits))
-            return acc.bitwiseOR(
-                F.when(
-                    (b >= F.lit(w * 64)) & (b < F.lit((w + 1) * 64)),
-                    # pmod(t, 64) == pmod(pmod(t, nbits), 64): 64 | nbits
-                    F.call_function(
-                        "shiftleft",
-                        F.lit(1).cast("long"),
-                        F.pmod(t, F.lit(64)).cast("int"),
-                    ),
-                ).otherwise(F.lit(0).cast("long"))
-            )
-
-        return step
-
-    return [
-        F.aggregate(F.col(arr_col), F.lit(0).cast("long"), _step_for(w)).alias(
-            f"{prefix}{w}"
-        )
-        for w in range(nw)
-    ]
+    )
 
 
 def _bitmap_intersect_ub(a_prefix: str, b_prefix: str, na: str = "na", nb: str = "nb"):
-    """na + nb − popcount(bm_a | bm_b) — exact upper bound on |A∩B|."""
-    from functools import reduce
-    from operator import add
-
-    popc = reduce(
-        add,
-        [
-            F.bit_count(
-                F.col(f"{a_prefix}{w}").bitwiseOR(F.col(f"{b_prefix}{w}"))
-            )
-            for w in range(BITMAP_PRUNE_WORDS)
-        ],
+    """na + nb − popcount(bm_a | bm_b) over the W lossy words — exact
+    upper bound on |A∩B|."""
+    return F.col(na) + F.col(nb) - _popcount_sum(
+        a_prefix, b_prefix, "or", SET_BITMAP_WORDS
     )
-    return F.col(na) + F.col(nb) - popc
 
 
 def _bitmap_keep_jaccard(a_prefix: str, b_prefix: str, threshold: float):
@@ -492,36 +430,65 @@ def _bitmap_guard(keep_cond, exact_intersect):
     Why a CASE instead of a separate ``.filter(keep)``: Catalyst pushes
     the downstream ratio-threshold filter (which references the
     intersect through the projection) all the way into the verify
-    JOIN's condition — and PushPredicateThroughJoin prepends it, so the
-    pushed exact filter evaluated BEFORE the prune conjunct and every
-    candidate pair still paid the array_intersect (measured at the 10×
-    corpus with MMR_SETMASK=off: dedup_components' pairwise stage only
-    5084 → 4304 exec-s). SQL CASE semantics guarantee the THEN branch
-    is only evaluated when the guard holds, no matter where the
-    optimizer moves the enclosing expression. The −1 sentinel yields a
-    negative jaccard/containment, which the unchanged exact threshold
-    filter (t > 0) drops — exactly the pairs the upper bound proves
-    sub-threshold — so the survivor set is bit-identical."""
+    JOIN's condition — and PushPredicateThroughJoin prepends it, so a
+    pushed exact filter would evaluate BEFORE the prune conjunct and
+    every candidate pair would still pay the array_intersect. SQL CASE
+    semantics guarantee the THEN branch is only evaluated when the
+    guard holds, no matter where the optimizer moves the enclosing
+    expression. The −1 sentinel yields a negative jaccard/containment,
+    which the unchanged exact threshold filter (t > 0) drops — exactly
+    the pairs the upper bound proves sub-threshold — so the survivor
+    set is identical."""
     return F.when(keep_cond, exact_intersect).otherwise(F.lit(-1))
 
 
-def _group_masks(groups: DataFrame, n_words: int) -> DataFrame:
-    """(toks_h, _m0.._m{W-1}) for the collapsed-group relation. Keyed
-    by the hashed token ARRAY (the group identity — gid is NOT unique
-    under the duplicate-doc_id fixture, where one doc_id can be the
-    min member of two different token sets); the vocab mapping is
-    derived from the persisted groups relation itself, so no extra
-    corpus scan enters the plan."""
-    ids = groups.select(F.explode("toks_h").alias("id"))
-    vocab = _setmask_vocab(ids)
-    tokm = groups.select("toks_h").distinct().select(
-        "toks_h", F.explode("toks_h").alias("id")
-    )
-    return (
-        tokm.join(F.broadcast(vocab), "id")
-        .groupBy("toks_h")
-        .agg(*_mask_word_aggs(n_words))
-    )
+def _bitmap_verify(
+    sets: DataFrame,
+    key: str,
+    arr_col: str,
+    regime: tuple,
+    a_cols: dict,
+    b_cols: dict,
+    keep=None,
+):
+    """Both sides of a set-intersection verify plus its |A∩B| column.
+
+    ``a_cols`` / ``b_cols`` map each side's output names to ``sets``
+    columns; ``key`` must identify a set (the bitmap joins back on it);
+    ``regime`` is :func:`_bitmap_regime`'s (exact, words, literal).
+    Exact regime: each side carries its bitmap words (``_a*`` /
+    ``_b*``) and the count is popcount(a & b); with literal ids (looked
+    up by ``arr_col``, which names the id space) the words are a
+    projection, else a _set_bitmaps join. Lossy regime: each side
+    carries the id array (``_ta`` / ``_tb``) and the count is
+    size(array_intersect); a ``keep`` condition over ``_a*`` / ``_b*``
+    (the union bound) adds the bitmaps and CASE-guards the count —
+    sites whose candidates are already filtered pass none."""
+    exact, nw, literal = regime
+    bitmap = exact or keep is not None
+    if literal is not None:
+        rel = sets.select("*", *_literal_mask_cols(arr_col, literal[arr_col]))
+    elif bitmap:
+        rel = sets.join(_set_bitmaps(sets, key, arr_col, exact, nw), key)
+    else:
+        rel = sets
+
+    def side(cols: dict, p: str) -> DataFrame:
+        return rel.select(
+            *[F.col(src).alias(dst) for dst, src in cols.items()],
+            *([] if exact else [F.col(arr_col).alias(f"_t{p}")]),
+            *(
+                [F.col(f"_b{w}").alias(f"_{p}{w}") for w in range(nw)]
+                if bitmap
+                else []
+            ),
+        )
+
+    a, b = side(a_cols, "a"), side(b_cols, "b")
+    if exact:
+        return a, b, _popcount_sum("_a", "_b", "and", nw).cast("int")
+    inter = F.size(F.array_intersect("_ta", "_tb"))
+    return a, b, inter if keep is None else _bitmap_guard(keep, inter)
 
 
 def _jaccard_group_cross(
@@ -556,79 +523,26 @@ def _jaccard_group_cross(
         F.col("c").cast("double") / (F.col("na") + F.col("nb") - F.col("c"))
     ).alias("jaccard")
     if _jaccard_path_decision(groups, sf_dir, tag=decision_tag)["use_broadcast"]:
-        sm = _setmask_decision(
-            spark,
-            sf_dir,
-            groups.select(F.explode("toks_h").alias("id")),
-            f"jaccard_groups{decision_tag}",
+        # pairwise path: broadcast the collapsed-group relation and
+        # verify each of the |G|²/2 size-pruned pairs against the set
+        # bitmaps (see the set-bitmap block) — byte-guarded above (the
+        # relation carries full toks_h arrays, so the gate is a
+        # measured bytes estimate, not a row count). Lossy regime: the
+        # union bound, gid order and size-ratio prune all sit inside
+        # the CASE guard, so a sub-threshold pair never evaluates
+        # array_intersect even after Catalyst pushes the threshold
+        # filter into the join condition.
+        a, b, c = _bitmap_verify(
+            groups,
+            "toks_h",
+            "toks_h",
+            _bitmap_regime(spark, sf_dir),
+            {"ga": "gid", "m_a": "members", "na": "n"},
+            {"gb": "gid", "m_b": "members", "nb": "n"},
+            keep=(F.col("ga") < F.col("gb"))
+            & ratio_prune
+            & _bitmap_keep_jaccard("_a", "_b", JACCARD_THRESHOLD),
         )
-        # the JOIN-based mask build only engages on the UNBOUNDED
-        # full-corpus path: the eval-sampled variants (decision_tag !=
-        # "") are capped at ~EVAL_SAMPLE_TARGET_DOCS docs by
-        # construction, and that build's extra stages cost more than
-        # the bounded intersect work saves (A/B at sf0.1: sweep
-        # +0.27 s, kfold +0.49 s, recall +1.4 s sampled vs components
-        # −2.4 s full). The LITERAL mask path adds no stages at all, so
-        # it engages everywhere.
-        use_masks = sm["engage"] and ("vocab_ids" in sm or not decision_tag)
-        if use_masks:
-            # bitmask pairwise path (r10 optimization, see the setmask
-            # block above): the broadcast relation carries W longs per
-            # group instead of the token array, and each of the |G|²/2
-            # candidate intersections is W AND+popcounts instead of an
-            # array_intersect hash build — profiled 93 → ~8 exec-s on
-            # the components edge stage at sf0.1, value-identical
-            nw = sm["n_words"]
-            if "vocab_ids" in sm:
-                g2 = groups.select(
-                    "gid", "members", "n",
-                    *_literal_mask_cols("toks_h", sm["vocab_ids"]),
-                )
-            else:
-                g2 = groups.join(F.broadcast(_group_masks(groups, nw)), "toks_h")
-            a = g2.select(
-                F.col("gid").alias("ga"),
-                F.col("members").alias("m_a"), F.col("n").alias("na"),
-                *[F.col(f"_m{w}").alias(f"_a{w}") for w in range(nw)],
-            )
-            b = g2.select(
-                F.col("gid").alias("gb"),
-                F.col("members").alias("m_b"), F.col("n").alias("nb"),
-                *[F.col(f"_m{w}").alias(f"_b{w}") for w in range(nw)],
-            )
-            c = _mask_intersect_size(nw, "_a", "_b")
-        else:
-            # pairwise path: broadcast the collapsed-group relation and
-            # compare hashed token arrays directly — byte-guarded above
-            # (the relation carries full toks_h arrays, so the gate is a
-            # measured bytes estimate, not a row count). r11: each side
-            # additionally carries the W-long lossy bitmap, and the
-            # exact intersect is CASE-guarded by the cheap conjuncts —
-            # gid order, size-ratio prune, hashed-bitmap union bound —
-            # so a sub-threshold pair is rejected by int compares + W
-            # OR+popcounts and never evaluates array_intersect, even
-            # after Catalyst pushes the threshold filter into the join
-            # condition (see _bitmap_guard; 5084 exec-s before at the
-            # 10× disengaged profile)
-            bm = _bitmap_prune_on()
-            a = groups.select(
-                F.col("gid").alias("ga"), F.col("toks_h").alias("ta"),
-                F.col("members").alias("m_a"), F.col("n").alias("na"),
-                *(_bitmap_cols("toks_h", "_pa") if bm else []),
-            )
-            b = groups.select(
-                F.col("gid").alias("gb"), F.col("toks_h").alias("tb"),
-                F.col("members").alias("m_b"), F.col("n").alias("nb"),
-                *(_bitmap_cols("toks_h", "_pb") if bm else []),
-            )
-            c = F.size(F.array_intersect("ta", "tb"))
-            if bm:
-                c = _bitmap_guard(
-                    (F.col("ga") < F.col("gb"))
-                    & ratio_prune
-                    & _bitmap_keep_jaccard("_pa", "_pb", JACCARD_THRESHOLD),
-                    c,
-                )
         cross = (
             F.broadcast(a)
             .join(b, (F.col("ga") < F.col("gb")) & ratio_prune)
@@ -1342,53 +1256,21 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("ga", "gb")
         )
-    # bitmask verify under the measured vocab decision — same shape and
-    # rationale as the jaccard group cross (see the setmask block); the
-    # candidate⋈group joins then carry W longs instead of token arrays
-    sm = _setmask_decision(
-        spark, sf_dir, groups.select(F.explode("toks_h").alias("id")), "containment_groups"
+    # set-bitmap verify (see the set-bitmap block): the nested loop is
+    # a |G|² candidate stream, so its lossy verify carries the union
+    # bound; the prefix witnesses are already filtered and keep the
+    # plain array_intersect
+    a, b, c = _bitmap_verify(
+        groups,
+        "toks_h",
+        "toks_h",
+        _bitmap_regime(spark, sf_dir),
+        {"ga": "gid", "m_a": "members", "na": "n"},
+        {"gb": "gid", "m_b": "members", "nb": "n"},
+        keep=None
+        if use_prefix
+        else _bitmap_keep_containment("_a", "_b", CONTAINMENT_THRESHOLD),
     )
-    if sm["engage"]:
-        nw = sm["n_words"]
-        if "vocab_ids" in sm:
-            # literal masks: pure projection, zero extra stages
-            g2 = groups.select(
-                "gid", "members", "n",
-                *_literal_mask_cols("toks_h", sm["vocab_ids"]),
-            )
-        else:
-            g2 = groups.join(F.broadcast(_group_masks(groups, nw)), "toks_h")
-        a = g2.select(
-            F.col("gid").alias("ga"),
-            F.col("members").alias("m_a"), F.col("n").alias("na"),
-            *[F.col(f"_m{w}").alias(f"_a{w}") for w in range(nw)],
-        )
-        b = g2.select(
-            F.col("gid").alias("gb"), F.col("members").alias("m_b"),
-            *[F.col(f"_m{w}").alias(f"_b{w}") for w in range(nw)],
-        )
-        c = _mask_intersect_size(nw, "_a", "_b")
-    else:
-        # r11: disengaged verify carries the lossy bitmap, and the
-        # exact intersect is CASE-guarded by the union upper bound so
-        # pruned candidates never evaluate array_intersect regardless
-        # of filter pushdown (see _bitmap_guard)
-        bm = _bitmap_prune_on()
-        a = groups.select(
-            F.col("gid").alias("ga"), F.col("toks_h").alias("ta"),
-            F.col("members").alias("m_a"), F.col("n").alias("na"),
-            *(_bitmap_cols("toks_h", "_pa") if bm else []),
-        )
-        b = groups.select(
-            F.col("gid").alias("gb"), F.col("toks_h").alias("tb"),
-            F.col("members").alias("m_b"),
-            *([F.col("n").alias("nb")] + _bitmap_cols("toks_h", "_pb") if bm else []),
-        )
-        c = F.size(F.array_intersect("ta", "tb"))
-        if bm:
-            c = _bitmap_guard(
-                _bitmap_keep_containment("_pa", "_pb", CONTAINMENT_THRESHOLD), c
-            )
     cross = (
         cand.join(a, "ga")
         .join(b, "gb")
@@ -1913,64 +1795,21 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     else:
         cand = _lsh_chunked_candidates(bands, hot_threshold)
-    # exact Jaccard verification on candidate group pairs: intersect/union
-    # over fixed-width long arrays is O(|a|+|b|) integer compares in
-    # codegen — no shuffle of exploded tokens, no string comparisons. The
-    # group table joins by gid; AQE broadcasts it when small, shuffles by
-    # key at 100 TB.
-    # bitmask verify under the measured vocab decision (r10, see the
-    # setmask block) — same shape as dedup_containment's verify
-    sm = _setmask_decision(
-        spark, sf_dir, groups.select(F.explode("toks_h").alias("id")), "minhash_lsh_groups"
+    # exact Jaccard verification on candidate group pairs over the set
+    # bitmaps (see the set-bitmap block) — no shuffle of exploded
+    # tokens, no string comparisons; |A∪B| = na + nb - |A∩B| (sets are
+    # distinct by construction), so one intersect per candidate. The
+    # group table joins by gid; AQE broadcasts it when small, shuffles
+    # by key at 100 TB. Banding survivors are already filtered, so a
+    # lossy verify keeps the plain array_intersect.
+    ga, gb, inter = _bitmap_verify(
+        groups,
+        "toks_h",
+        "toks_h",
+        _bitmap_regime(spark, sf_dir),
+        {"ga": "gid", "m_a": "members", "na": "n"},
+        {"gb": "gid", "m_b": "members", "nb": "n"},
     )
-    if sm["engage"]:
-        nw = sm["n_words"]
-        if "vocab_ids" in sm:
-            g2 = groups.select(
-                "gid", "members", "n",
-                *_literal_mask_cols("toks_h", sm["vocab_ids"]),
-            )
-        else:
-            g2 = groups.join(F.broadcast(_group_masks(groups, nw)), "toks_h")
-        ga = g2.select(
-            F.col("gid").alias("ga"), F.col("members").alias("m_a"),
-            F.col("n").alias("na"),
-            *[F.col(f"_m{w}").alias(f"_a{w}") for w in range(nw)],
-        )
-        gb = g2.select(
-            F.col("gid").alias("gb"), F.col("members").alias("m_b"),
-            F.col("n").alias("nb"),
-            *[F.col(f"_m{w}").alias(f"_b{w}") for w in range(nw)],
-        )
-        inter = _mask_intersect_size(nw, "_a", "_b")
-    else:
-        bm = _bitmap_prune_on()
-        ga = groups.select(
-            F.col("gid").alias("ga"),
-            F.col("toks_h").alias("toks_a"),
-            F.col("members").alias("m_a"),
-            F.col("n").alias("na"),
-            *(_bitmap_cols("toks_h", "_pa") if bm else []),
-        )
-        gb = groups.select(
-            F.col("gid").alias("gb"),
-            F.col("toks_h").alias("toks_b"),
-            F.col("members").alias("m_b"),
-            F.col("n").alias("nb"),
-            *(_bitmap_cols("toks_h", "_pb") if bm else []),
-        )
-        # |A∪B| = na + nb - |A∩B| (sets are distinct by construction):
-        # one array_intersect per candidate instead of intersect + union —
-        # the verify step is the hot loop when the corpus is near-dup
-        # dense. The intersect lands in its own projection so it is
-        # evaluated once even though jaccard references it twice. r11:
-        # candidates failing the lossy-bitmap union bound never evaluate
-        # the intersect — CASE-guarded, pushdown-proof (_bitmap_guard).
-        inter = F.size(F.array_intersect("toks_a", "toks_b"))
-        if bm:
-            inter = _bitmap_guard(
-                _bitmap_keep_jaccard("_pa", "_pb", JACCARD_THRESHOLD), inter
-            )
     verified = (
         cand.join(ga, "ga")
         .join(gb, "gb")
@@ -2132,16 +1971,11 @@ def dedup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_verified_pairs(
-    spark: SparkSession, sf_dir: str, docs: DataFrame | None = None,
-    sample_k: int = 1,
+    spark: SparkSession, sf_dir: str, docs: DataFrame | None = None
 ) -> DataFrame:
     """Banded-and-verified MinHash pairs over ``docs`` (the full
     documents table by default; the md5-uniform eval sample when the
-    recall report engages sampling). ``sample_k`` is the sample modulus
-    that produced ``docs`` — it keys the setmask decision memo so two
-    builds with different moduli in one process can never reuse each
-    other's literal vocabulary (ADVICE r10)."""
-    docs_is_full = docs is None
+    recall report engages sampling)."""
     if docs is None:
         docs = load_table(spark, sf_dir, "documents")
     docs = spread(
@@ -2171,48 +2005,6 @@ def _minhash_verified_pairs(
     sigs = dsets.select(
         "doc_id", "tids", F.size("tids").alias("n"), *sig_cols
     ).transform(tracked_persist)
-    # bitmask verify (r10 optimization, see the setmask block): when the
-    # distinct-tid universe fits, the verify join ships W longs per doc
-    # instead of the tid array and each candidate intersection is W
-    # AND+popcounts instead of an array_intersect (profiled ~44 exec-s
-    # in the verify stage at sf0.1). Masks and the vocab mapping are
-    # both derived from the PERSISTED sigs relation (cached reads, no
-    # extra corpus scan enters the plan); doc_id is unique post-groupBy
-    # so it can key the mask aggregate, and n rides along as the
-    # distinct-tid count. The decision is memoized per corpus+variant
-    # (sample-restricted positions when the eval sample engages —
-    # positions only need to be consistent within one plan).
-    sm = _setmask_decision(
-        spark,
-        sf_dir,
-        sigs.select(F.explode("tids").alias("id")),
-        # the sampled site carries the modulus (ADVICE r10): a second
-        # build at a different k must not reuse the first sample's
-        # memoized literal vocab_ids — token ids outside them would be
-        # silently dropped from the bitmasks. Matches the jaccard
-        # twin's decision_tag=f"sample{k}" keying.
-        "minhash_tids" if docs_is_full else f"minhash_tids_sampled{sample_k}",
-    )
-    mask_rel = None
-    lit_masks = None
-    if sm["engage"] and "vocab_ids" in sm:
-        # literal masks: pure projection over the persisted sigs rows,
-        # zero extra stages — engages on the sampled variants too
-        lit_masks = sm["vocab_ids"]
-    elif sm["engage"] and docs_is_full:
-        # the JOIN-based mask build only on the unbounded full path
-        # (A/B: its extra stages cost more than bounded eval-sampled
-        # relations save — see the jaccard-cross twin of this gate)
-        nw = sm["n_words"]
-        vocab = _setmask_vocab(sigs.select(F.explode("tids").alias("id")))
-        # persisted: referenced by BOTH sides of the verify join
-        mask_rel = (
-            sigs.select("doc_id", F.explode("tids").alias("id"))
-            .join(F.broadcast(vocab), "id")
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n"), *_mask_word_aggs(nw))
-            .transform(tracked_persist)
-        )
     # band key = (band index, the band's 2 signature values) as a struct —
     # exact equality, no re-hash, so the candidate set is literally the
     # oracle's OR-of-band-equalities, generated by ONE equi-join
@@ -2245,50 +2037,17 @@ def _minhash_verified_pairs(
         .select(F.col("x.doc_id").alias("da"), F.col("y.doc_id").alias("db"))
         .distinct()
     )
-    if lit_masks is not None:
-        nw = sm["n_words"]
-        lit_cols = _literal_mask_cols("tids", lit_masks)
-        sa = sigs.select(
-            F.col("doc_id").alias("da"), F.col("n").alias("na"),
-            *[c.alias(f"_a{w}") for w, c in enumerate(lit_cols)],
-        )
-        sb = sigs.select(
-            F.col("doc_id").alias("db"), F.col("n").alias("nb"),
-            *[c.alias(f"_b{w}") for w, c in enumerate(lit_cols)],
-        )
-        inter = _mask_intersect_size(nw, "_a", "_b")
-    elif mask_rel is not None:
-        nw = sm["n_words"]
-        sa = mask_rel.select(
-            F.col("doc_id").alias("da"), F.col("n").alias("na"),
-            *[F.col(f"_m{w}").alias(f"_a{w}") for w in range(nw)],
-        )
-        sb = mask_rel.select(
-            F.col("doc_id").alias("db"), F.col("n").alias("nb"),
-            *[F.col(f"_m{w}").alias(f"_b{w}") for w in range(nw)],
-        )
-        inter = _mask_intersect_size(nw, "_a", "_b")
-    else:
-        # r11: banding survivors are mostly true near-dups, so the
-        # lossy-bitmap prune is site-default OFF here (A/B-measured
-        # net-negative — see _bitmap_prune_on); MMR_BITMAP_PRUNE=on
-        # still engages the CASE-guarded path for A/B runs
-        bm = _bitmap_prune_on(site_default=False)
-        sa = sigs.select(
-            F.col("doc_id").alias("da"), F.col("tids").alias("ta"),
-            F.col("n").alias("na"),
-            *(_bitmap_cols("tids", "_pa") if bm else []),
-        )
-        sb = sigs.select(
-            F.col("doc_id").alias("db"), F.col("tids").alias("tb"),
-            F.col("n").alias("nb"),
-            *(_bitmap_cols("tids", "_pb") if bm else []),
-        )
-        inter = F.size(F.array_intersect("ta", "tb"))
-        if bm:
-            inter = _bitmap_guard(
-                _bitmap_keep_jaccard("_pa", "_pb", JACCARD_THRESHOLD), inter
-            )
+    # set-bitmap verify (see the set-bitmap block), keyed by doc_id
+    # (unique after the groupBy): banding survivors are already
+    # filtered, so a lossy verify keeps the plain array_intersect
+    sa, sb, inter = _bitmap_verify(
+        sigs,
+        "doc_id",
+        "tids",
+        _bitmap_regime(spark, sf_dir),
+        {"da": "doc_id", "na": "n"},
+        {"db": "doc_id", "nb": "n"},
+    )
     return (
         cand.join(sa, "da")
         .join(sb, "db")
@@ -3625,7 +3384,7 @@ def _verified_pairs_memo(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
 
     def build() -> DataFrame:
         docs = _eval_sampled_docs(spark, sf_dir, k) if k > 1 else None
-        return _minhash_verified_pairs(spark, sf_dir, docs=docs, sample_k=k)
+        return _minhash_verified_pairs(spark, sf_dir, docs=docs)
 
     return memoized_result_checkpoint("minhash_verified_pairs", key, build)
 
@@ -3857,62 +3616,15 @@ def dedup_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("x.doc_id").alias("da"), F.col("y.doc_id").alias("db"))
         .distinct()
     )
-    # bitmask verify under the measured vocab decision — same shape and
-    # rationale as _minhash_verified_pairs (see the setmask block)
-    sm = _setmask_decision(
-        spark, sf_dir, sigs.select(F.explode("tids").alias("id")), "incremental_tids"
+    # same banding-survivor verify as _minhash_verified_pairs
+    sa, sb, inter = _bitmap_verify(
+        sigs,
+        "doc_id",
+        "tids",
+        _bitmap_regime(spark, sf_dir),
+        {"da": "doc_id", "na": "n"},
+        {"db": "doc_id", "nb": "n"},
     )
-    if sm["engage"] and "vocab_ids" in sm:
-        # literal masks: pure projection, zero extra stages
-        nw = sm["n_words"]
-        lit_cols = _literal_mask_cols("tids", sm["vocab_ids"])
-        sa = sigs.select(
-            F.col("doc_id").alias("da"), F.col("n").alias("na"),
-            *[c.alias(f"_a{w}") for w, c in enumerate(lit_cols)],
-        )
-        sb = sigs.select(
-            F.col("doc_id").alias("db"), F.col("n").alias("nb"),
-            *[c.alias(f"_b{w}") for w, c in enumerate(lit_cols)],
-        )
-        inter = _mask_intersect_size(nw, "_a", "_b")
-    elif sm["engage"]:
-        nw = sm["n_words"]
-        vocab = _setmask_vocab(sigs.select(F.explode("tids").alias("id")))
-        mask_rel = (
-            sigs.select("doc_id", F.explode("tids").alias("id"))
-            .join(F.broadcast(vocab), "id")
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n"), *_mask_word_aggs(nw))
-            .transform(tracked_persist)
-        )
-        sa = mask_rel.select(
-            F.col("doc_id").alias("da"), F.col("n").alias("na"),
-            *[F.col(f"_m{w}").alias(f"_a{w}") for w in range(nw)],
-        )
-        sb = mask_rel.select(
-            F.col("doc_id").alias("db"), F.col("n").alias("nb"),
-            *[F.col(f"_m{w}").alias(f"_b{w}") for w in range(nw)],
-        )
-        inter = _mask_intersect_size(nw, "_a", "_b")
-    else:
-        # r11: same banding-survivor shape as _minhash_verified_pairs —
-        # prune site-default OFF (A/B-measured net-negative there)
-        bm = _bitmap_prune_on(site_default=False)
-        sa = sigs.select(
-            F.col("doc_id").alias("da"), F.col("tids").alias("ta"),
-            F.col("n").alias("na"),
-            *(_bitmap_cols("tids", "_pa") if bm else []),
-        )
-        sb = sigs.select(
-            F.col("doc_id").alias("db"), F.col("tids").alias("tb"),
-            F.col("n").alias("nb"),
-            *(_bitmap_cols("tids", "_pb") if bm else []),
-        )
-        inter = F.size(F.array_intersect("ta", "tb"))
-        if bm:
-            inter = _bitmap_guard(
-                _bitmap_keep_jaccard("_pa", "_pb", JACCARD_THRESHOLD), inter
-            )
     return (
         cand.join(sa, "da")
         .join(sb, "db")

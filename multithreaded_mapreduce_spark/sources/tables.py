@@ -10,7 +10,6 @@ and predicate pushdown available to every downstream query.
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -154,6 +153,23 @@ def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TA
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
+def _size_conf(spark: SparkSession, key: str, default: int) -> int:
+    """A byte-size conf in bytes, parsed by Spark's own JVM parser
+    (``JavaUtils.byteStringAsBytes``): ``'128m'``, ``'1g'`` and the
+    ``'134217728b'`` form the session reports for defaults all read
+    as Spark reads them. ``default`` only covers an unreadable key; a
+    value Spark cannot parse raises."""
+    try:
+        raw = spark.conf.get(key)
+    except Exception:
+        return default
+    if raw is None:
+        return default
+    return int(
+        spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(str(raw))
+    )
+
+
 def _est_scan_splits(df: DataFrame) -> int | None:
     """Estimate how many scan tasks ``df``'s file sources resolve to,
     from the file list and the session's split-packing knobs — the
@@ -168,18 +184,9 @@ def _est_scan_splits(df: DataFrame) -> int | None:
     if not files:
         return None
 
-    conf = df.sparkSession.conf
-
-    def _size_conf(key: str, default: int) -> int:
-        try:
-            raw = str(conf.get(key))
-        except Exception:
-            return default
-        m = re.match(r"(\d+)", raw)
-        return int(m.group(1)) if m else default
-
-    max_bytes = _size_conf("spark.sql.files.maxPartitionBytes", 128 * 1024 * 1024)
-    open_cost = _size_conf("spark.sql.files.openCostInBytes", 4 * 1024 * 1024)
+    spark = df.sparkSession
+    max_bytes = _size_conf(spark, "spark.sql.files.maxPartitionBytes", 128 * 1024 * 1024)
+    open_cost = _size_conf(spark, "spark.sql.files.openCostInBytes", 4 * 1024 * 1024)
     total = 0
     for f in files:
         if not f.startswith("file:"):

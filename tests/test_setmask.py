@@ -1,18 +1,22 @@
-"""r10 optimization-round tests: the fixed-width set-bitmask compare
-(operators/dedup.py, the setmask block) and the literal-rows helper
+"""The set bitmaps behind every dedup |A∩B| verify
+(operators/dedup.py, the set-bitmap block) and the literal-rows helper
 (functions/rows.py).
 
-The bitmask path replaces array_intersect with W AND+popcounts when
-the corpus' distinct token-id universe fits SETMASK_MAX_VOCAB bit
-positions. The engaged single-word (W=1) path is already exercised
-against the DuckDB oracle by every dedup row of the adversarial
-edge-docs sweep (vocab ~30 there); what needs its own coverage is
+Every verify site builds its sets' bitmaps with one helper,
+``_set_bitmaps``, in one of two regimes picked by the corpus'
+distinct-token count against 64·W bit positions (W =
+``SET_BITMAP_WORDS``): exact (dense positions, popcount(a & b) is the
+intersection) or lossy (pmod positions, the union bound guards the
+exact array_intersect). Coverage here:
 
-* the MULTI-word path (vocab > 64 → W >= 2, the shape a 10× corpus
-  takes under the disjoint-replica-vocabulary generator),
-* the off/on value identity that makes the knob a pure plan decision,
-* the sampled-variant skip (the A/B-measured gate), and
-* the kill switch / cap disengage.
+* the width table: every consumer query returns the same row multiset
+  in both regimes — forced by the width alone over a ~90-token corpus
+  (W=1 lossy, W=2 exact) — and equals its DuckDB oracle where one
+  exists,
+* the regime comes from ONE memoized distinct-token count per
+  document relation, and the lossy plan carries a bit_or aggregate and
+  no higher-order fold,
+* exact positions cross the 64-bit word boundary correctly.
 """
 
 from __future__ import annotations
@@ -29,20 +33,24 @@ from multithreaded_mapreduce_spark.plans.caching import (
     release_tracked,
 )
 from multithreaded_mapreduce_spark.plans.registry import all_queries
+from multithreaded_mapreduce_spark.plans.verification import (
+    compare_query,
+    duck_connection,
+    rows_multiset,
+)
 from multithreaded_mapreduce_spark.sources.tables import TABLES, table_path
 
 from .conftest import SF_DIR
-from .oracle import compare_query
 
 _Q = all_queries()
 
 
 @pytest.fixture(scope="module")
 def wide_vocab_dir(tmp_path_factory, spark) -> str:
-    """sf0.001 with documents rewritten over a ~90-token vocabulary so
-    the setmask decision lands on W = 2 words — near-dup structure is
-    preserved (clone pairs per base doc) so the pair relations are
-    non-trivial."""
+    """sf0.001 with documents rewritten over a ~90-token vocabulary, so
+    W=1 (64 bits) is the lossy regime and W=2 (128 bits) the exact
+    multi-word one — near-dup structure is preserved (clone pairs per
+    base doc) so the pair relations are non-trivial."""
     d = str(tmp_path_factory.mktemp("wide_vocab_sf"))
     for t in TABLES:
         if t != "documents":
@@ -67,129 +75,116 @@ def wide_vocab_dir(tmp_path_factory, spark) -> str:
     return d
 
 
-def _snapshot(spark, name: str, sf_dir: str):
+#: the width table's consumers: every query (or eval-pair relation)
+#: whose pair set runs through a set-bitmap verify site
+_CONSUMERS = (
+    "dedup_jaccard_pairs", "dedup_minhash_verified", "dedup_components",
+    "dedup_containment", "dedup_incremental_neardup", "dedup_minhash_lsh",
+    "dedup_threshold_sweep", "kfold_leakage_report", "lsh_recall_report",
+    "eval_pairs_sampled",
+)
+
+
+def _run(spark, name: str, sf_dir: str, monkeypatch):
+    """(columns, rows) of one consumer at the current width, cold."""
     release_tracked()
     release_result_memos()
     spark.catalog.clearCache()
-    return sorted(tuple(r) for r in _Q[name].builder(spark, sf_dir).collect())
+    if name == "eval_pairs_sampled":
+        # the eval-sampled pair relation (sweep / kfold / recall ground
+        # truth past the target): a 1-in-k sample of the 90 docs
+        monkeypatch.setattr(dd, "EVAL_SAMPLE_TARGET_DOCS", 40)
+        dd._EVAL_SAMPLE_CACHE.clear()
+        assert dd._eval_sample_decision(spark, sf_dir)["modulus"] > 1
+        df = dd._eval_pairs(spark, sf_dir)
+    else:
+        df = _Q[name].builder(spark, sf_dir)
+    return list(df.columns), [tuple(r) for r in df.collect()]
 
 
-@pytest.mark.parametrize(
-    "name",
-    ["dedup_jaccard_pairs", "dedup_minhash_verified", "dedup_components",
-     "dedup_containment", "dedup_incremental_neardup"],
-)
+@pytest.mark.parametrize("name", _CONSUMERS)
 def test_multiword_mask_off_on_identity(spark, wide_vocab_dir, name, monkeypatch):
-    """W=2 engaged path returns the identical row multiset as the
-    array path — the optimization is a pure plan decision."""
-    monkeypatch.setenv("MMR_SETMASK", "off")
-    dd._SETMASK_DECISION_CACHE.clear()
-    off = _snapshot(spark, name, wide_vocab_dir)
-    monkeypatch.setenv("MMR_SETMASK", "auto")
-    dd._SETMASK_DECISION_CACHE.clear()
-    on = _snapshot(spark, name, wide_vocab_dir)
-    assert dd.LAST_SETMASK_DECISION["engage"], dd.LAST_SETMASK_DECISION
-    assert dd.LAST_SETMASK_DECISION["n_words"] >= 2, dd.LAST_SETMASK_DECISION
-    assert off == on
-    assert len(on) > 0  # the fixture plants real dup/near-dup pairs
+    """The width table. W=1 puts the ~90-token corpus in the lossy
+    regime ("off": hashed positions, union-bound-guarded
+    array_intersect), W=2 in the exact multi-word regime ("on":
+    popcount(a & b)); both return the identical row multiset, and it
+    equals the registered DuckDB oracle where one exists."""
+    runs = {}
+    for words, exact in ((1, False), (2, True)):
+        monkeypatch.setattr(dd, "SET_BITMAP_WORDS", words)
+        assert dd._bitmap_regime(spark, wide_vocab_dir) == (exact, words, None)
+        runs[exact] = _run(spark, name, wide_vocab_dir, monkeypatch)
+    (cols, lossy), (_, exact) = runs[False], runs[True]
+    assert rows_multiset(cols, lossy) == rows_multiset(cols, exact)
+    assert len(exact) > 0  # the fixture plants real dup/near-dup pairs
+    q = _Q.get(name)
+    if q is not None and q.oracle:
+        con = duck_connection(wide_vocab_dir)
+        tbl = con.execute(q.oracle).fetch_arrow_table()
+        con.close()
+        oracle = [tuple(r.values()) for r in tbl.to_pylist()]
+        assert rows_multiset(cols, exact) == rows_multiset(
+            list(tbl.schema.names), oracle
+        )
 
 
-def test_multiword_mask_oracle_parity(spark, wide_vocab_dir):
-    """The engaged W=2 path also matches the registered DuckDB oracle
-    (value hash, not just self-consistency)."""
-    dd._SETMASK_DECISION_CACHE.clear()
+def test_multiword_mask_oracle_parity(spark, wide_vocab_dir, monkeypatch):
+    """The exact W=2 multi-word regime also matches the registered
+    DuckDB oracle through the driver's comparator (value hash, not just
+    self-consistency)."""
+    monkeypatch.setattr(dd, "SET_BITMAP_WORDS", 2)
+    dd._VOCAB_CACHE.clear()
     for name in ("dedup_jaccard_pairs", "dedup_minhash_verified"):
-        compare_query(spark, wide_vocab_dir, _Q[name].builder, _Q[name].oracle)
-    assert dd.LAST_SETMASK_DECISION["engage"]
-
-
-def test_sampled_variants_literal_only_and_identical(spark, monkeypatch):
-    """The eval-sampled pair relations are bounded by construction and
-    measured SLOWER with the JOIN-based mask build — they may engage
-    only the zero-extra-stage LITERAL path (vocab ≤ 64), and the
-    engaged output must equal the array path's."""
-    monkeypatch.setattr(dd, "EVAL_SAMPLE_TARGET_DOCS", 100)  # force k > 1
-    dd._EVAL_SAMPLE_CACHE.clear()
-
-    def eval_pairs_rows():
         release_tracked()
         release_result_memos()
         spark.catalog.clearCache()
-        return sorted(tuple(r) for r in dd._eval_pairs(spark, SF_DIR).collect())
-
-    monkeypatch.setenv("MMR_SETMASK", "off")
-    dd._SETMASK_DECISION_CACHE.clear()
-    off = eval_pairs_rows()
-    monkeypatch.setenv("MMR_SETMASK", "auto")
-    dd._SETMASK_DECISION_CACHE.clear()
-    on = eval_pairs_rows()
-    assert off == on and len(on) > 0
-    # the sampled site engaged via literal positions (vocab fits 64
-    # here); had the vocab exceeded the literal cap, the sampled path
-    # must fall back to arrays, never the join build — pinned below
-    sampled = [
-        d
-        for (_s, site), d in dd._SETMASK_DECISION_CACHE.items()
-        if site.startswith("jaccard_groupssample")
-    ]
-    assert sampled and all("vocab_ids" in d for d in sampled), sampled
-    # simulate a wide-vocab corpus: literal cap 0 → sampled variants
-    # must NOT take the join-mask branch (use_masks False)
-    monkeypatch.setattr(dd, "SETMASK_LITERAL_MAX_VOCAB", 0)
-    dd._SETMASK_DECISION_CACHE.clear()
-    wide = eval_pairs_rows()
-    assert wide == off
-    sampled = [
-        d
-        for (_s, site), d in dd._SETMASK_DECISION_CACHE.items()
-        if site.startswith("jaccard_groupssample")
-    ]
-    assert sampled and all("vocab_ids" not in d for d in sampled), sampled
+        compare_query(spark, wide_vocab_dir, _Q[name].builder, _Q[name].oracle)
+    assert dd._bitmap_regime(spark, wide_vocab_dir) == (True, 2, None)
 
 
-def test_cap_and_kill_switch_disengage(spark, monkeypatch):
-    monkeypatch.setenv("MMR_SETMASK", "off")
-    dd._SETMASK_DECISION_CACHE.clear()
-    sm = dd._setmask_decision(
-        spark, SF_DIR, spark.range(3).select(F.col("id")), "t1"
+def test_regime_from_one_vocab_count(spark, wide_vocab_dir, monkeypatch):
+    """The regime is the corpus' distinct-token count against 64·W,
+    counted ONCE per document relation and shared by every site; the
+    lossy dedup_components build plans a bit_or aggregate and no
+    higher-order aggregate( fold."""
+    dd._VOCAB_CACHE.clear()
+    monkeypatch.setattr(dd, "SET_BITMAP_WORDS", 1)
+    # 31 tokens: exact in one word, positions collected for projection
+    exact, words, literal = dd._bitmap_regime(spark, SF_DIR)
+    assert (exact, words, literal["n"]) == (True, 1, 31)
+    assert len(literal["toks_h"]) == len(literal["tids"]) == 31
+    # 90 tokens > 64·W: lossy, nothing collected
+    assert dd._bitmap_regime(spark, wide_vocab_dir) == (False, 1, None)
+    for name in ("dedup_containment", "dedup_minhash_verified", "dedup_components"):
+        _run(spark, name, wide_vocab_dir, monkeypatch)
+    # one entry per document relation, however many sites asked
+    assert sorted(dd._VOCAB_CACHE) == sorted(
+        {dd._docs_stamp(SF_DIR), dd._docs_stamp(wide_vocab_dir)}
     )
-    assert sm["engage"] is False and sm.get("forced") == "off"
-    monkeypatch.setenv("MMR_SETMASK", "auto")
-    monkeypatch.setattr(dd, "SETMASK_MAX_VOCAB", 2)
-    dd._SETMASK_DECISION_CACHE.clear()
-    sm = dd._setmask_decision(
-        spark, SF_DIR, spark.range(3).select(F.col("id")), "t2"
-    )
-    assert sm["engage"] is False and sm["n_vocab"] == 3
+    release_result_memos()
+    _, cross = dd._jaccard_group_cross(spark, wide_vocab_dir)
+    plan = cross._jdf.queryExecution().executedPlan().toString()
+    release_tracked()
+    assert "bit_or(" in plan, plan
+    assert "aggregate(" not in plan, plan
 
 
 def test_mask_words_cover_vocab_boundaries(spark):
-    """Bit assignment crosses the 64-bit word boundary correctly: 70
-    ids -> W=2, and a set containing ids on both sides of the boundary
+    """Exact bit assignment crosses the 64-bit word boundary correctly:
+    70 ids in 2 words, and a set holding ids on both sides of the boundary
     intersects exactly."""
-    ids = spark.range(70).select(F.col("id"))
-    vocab = dd._setmask_vocab(ids)
-    rows = vocab.collect()
-    assert sorted(r.pos for r in rows) == list(range(70))
-    # two sets: {0..69} and {60..69} -> intersection 10
-    sets_df = spark.createDataFrame(
-        [(1, list(range(70))), (2, list(range(60, 70)))], "sid int, members array<int>"
-    ).select("sid", F.explode("members").alias("id"))
-    masked = (
-        sets_df.join(vocab, "id")
-        .groupBy("sid")
-        .agg(*dd._mask_word_aggs(2))
+    sets = spark.createDataFrame(
+        [(1, [i * 1000 for i in range(70)]), (2, [i * 1000 for i in range(60, 70)])],
+        "sid int, ids array<long>",
     )
-    a = masked.filter("sid = 1").select(
-        *[F.col(f"_m{w}").alias(f"_a{w}") for w in range(2)]
-    )
-    b = masked.filter("sid = 2").select(
-        *[F.col(f"_m{w}").alias(f"_b{w}") for w in range(2)]
-    )
-    got = a.crossJoin(b).select(
-        dd._mask_intersect_size(2, "_a", "_b").alias("c")
-    ).first()["c"]
-    assert got == 10
+    bm = dd._set_bitmaps(sets, "sid", "ids", exact=True, nw=2)
+    rows = {r.sid: (r._b0, r._b1) for r in bm.collect()}
+    # dense positions: set 1 fills word 0 and the low 6 bits of word 1
+    assert rows[1] == (-1, (1 << 6) - 1)
+    a = bm.filter("sid = 1").select(F.col("_b0").alias("_a0"), F.col("_b1").alias("_a1"))
+    b = bm.filter("sid = 2")
+    got = a.crossJoin(b).select(dd._popcount_sum("_a", "_b", "and", 2).alias("c")).first()
+    assert got["c"] == 10
 
 
 def test_literal_rows_df_roundtrip(spark):

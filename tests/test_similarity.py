@@ -3,6 +3,8 @@ for rank correctness; this measures the recall/cost trade)."""
 
 from __future__ import annotations
 
+import pytest
+
 from multithreaded_mapreduce_spark.plans.registry import all_queries
 
 Q = all_queries()
@@ -282,3 +284,25 @@ def test_hard_negatives_cross_label_only(spark, sf_dir):
         )
         want = min(HARD_NEG_K, n_cross)
         assert sorted(rnks) == list(range(1, want + 1)), (q, rnks)
+
+
+
+# The centroid id is the literal array's transform INDEX, so a key set
+# other than 0..K-1 would silently remap ids: both literal builders
+# must refuse it with a ValueError (a bare assert vanishes under -O).
+
+
+def test_lloyd_centroid_keys_must_be_contiguous(spark):
+    from multithreaded_mapreduce_spark.operators.vectors import lloyd_dist_array
+
+    with pytest.raises(ValueError, match="0..K-1"):
+        lloyd_dist_array({0: [0.0, 1.0], 2: [1.0, 0.0]})
+    lloyd_dist_array({0: [0.0, 1.0], 1: [1.0, 0.0]})
+
+
+def test_pq_codebook_keys_must_be_contiguous(spark):
+    from multithreaded_mapreduce_spark.operators.similarity import _pq_best
+
+    with pytest.raises(ValueError, match="0..K-1"):
+        _pq_best(0, {1: [0.0], 2: [1.0]})
+    _pq_best(0, {0: [0.0], 1: [1.0]})

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from multithreaded_mapreduce_spark.sources.tables import (
     _est_scan_splits,
+    _size_conf,
     load_table,
     spread,
 )
@@ -58,3 +59,22 @@ def test_non_file_source_keeps_historical_spread(spark):
     rng = spark.range(100).select(F.col("id"))
     assert _est_scan_splits(rng) is None
     assert "RoundRobinPartitioning" in _plan(spread(rng))
+
+
+def test_size_conf_parses_unit_suffixes(spark):
+    """Byte-size confs go through Spark's own parser: a user-set
+    '128m' is 128 MiB (not 128 bytes), '1g' is 1 GiB, and the
+    session's reported default form '134217728b' stays 128 MiB."""
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    try:
+        for raw, want in (
+            ("128m", 128 * 1024 * 1024),
+            ("1g", 1024 * 1024 * 1024),
+            ("134217728b", 134217728),
+        ):
+            spark.conf.set(key, raw)
+            assert _size_conf(spark, key, -1) == want, raw
+    finally:
+        spark.conf.set(key, old)
+    assert _size_conf(spark, key, -1) == 134217728, old

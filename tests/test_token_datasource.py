@@ -10,6 +10,8 @@ whitespace, mid-token, and at EOF.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from multithreaded_mapreduce_spark.sources.token_datasource import (
@@ -17,6 +19,10 @@ from multithreaded_mapreduce_spark.sources.token_datasource import (
     register_token_source,
 )
 
+#: the reference checkout's small text fixtures, vendored from the
+#: content test_wordcount_parity.py's FIXTURES table records for them
+FIXTURE_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
+#: vlarge.txt is not vendored: it lives only in the reference checkout
 REF = "/root/reference"
 
 
@@ -44,7 +50,7 @@ def test_small_fixtures_all_boundaries(fixture):
     """Every possible single-split position on the small fixtures."""
     import os
 
-    path = f"{REF}/{fixture}.txt"
+    path = f"{FIXTURE_DIR}/{fixture}.txt"
     size = os.path.getsize(path)
     expect = _direct_tokens(path)
     for cut in range(1, size):
@@ -103,7 +109,7 @@ def test_empty_file(spark):
     register_token_source(spark)
     df = (
         spark.read.format("wstokens")
-        .option("path", f"{REF}/notext.txt")
+        .option("path", f"{FIXTURE_DIR}/notext.txt")
         .load()
     )
     assert df.count() == 0
